@@ -87,7 +87,7 @@ object StreamVerify {
     // corpus dup the FOLD rejects (the stream's own dedup state has
     // never seen them — the two dedup scopes compose).
     import org.apache.spark.sql.functions.{col, count, explode, expr, lit}
-    val standing = spark.read.parquet(s"$dir/documents.parquet")
+    val standing = Tables.load(spark, dir, "documents")
       .filter(col("doc_id") % 2 === 0).select("doc_id", "text")
     val labels0 = graft.ops.Clusters.connectedComponents(
       graft.ops.Dedup.nGramJaccard(standing, "text", "doc_id", 1, 2),

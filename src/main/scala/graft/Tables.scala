@@ -1,12 +1,27 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Catalog: maps logical table names to parquet files under a scale-factor
   * directory. Plays the role of the reference's `.det`/`.tbl` catalog
   * (reference: src/qp/utils/Schema.java, src/qp/operators/Scan.java:30) —
   * but schema comes from parquet footers and scans are columnar with
   * predicate pushdown instead of full-tuple deserialization.
+  *
+  * Every catalog read goes through one memoized path (`read`), which
+  * passes the table's schema to `spark.read.schema(..)` and so starts no
+  * job. The first read of a table converts the footer Spark's inference
+  * would convert, on the driver and with Spark's own converter, instead
+  * of running Spark's schema-inference job; the result is memoized. Row
+  * counts and uncompressed bytes come from one pass over the footers,
+  * memoized the same way. The memo key is everything
+  * inference depends on: the path, the file listing (each file's name,
+  * length and modification time) and the values of the SQL confs that
+  * shape parquet schema conversion (`SchemaConfs`). A table rewritten
+  * at the same path changes its listing, so the next read misses the memo
+  * and re-reads the metadata; no invalidation call is needed.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -15,7 +30,7 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else read(spark, s"$dir/$name.parquet")
   }
 
   /** The events table's `ts` encoding has varied across testdata
@@ -30,7 +45,7 @@ object Tables {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = read(spark, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType => // nanos column surfaced as long
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -74,7 +89,7 @@ object Tables {
     * for join ordering. Cheap: reads only file metadata.
     */
   def rowCount(spark: SparkSession, dir: String, name: String): Long =
-    footerSum(spark, dir, name)(_.getRecordCount)
+    footers(spark, s"$dir/$name.parquet").rows
 
   /** UNCOMPRESSED byte size from parquet footers (sum of row-group
     * `totalByteSize` — what the data costs once decoded, which is what a
@@ -83,11 +98,8 @@ object Tables {
     * alone mis-size relations with wide rows: 500k rows of 2 ints
     * broadcast fine, 500k rows of 4 KB strings are 2 GB.
     */
-  def uncompressedBytes(spark: SparkSession, dir: String, name: String): Long = {
-    import scala.jdk.CollectionConverters._
-    footerSum(spark, dir, name)(
-      _.getFooter.getBlocks.asScala.map(_.getTotalByteSize).sum)
-  }
+  def uncompressedBytes(spark: SparkSession, dir: String, name: String): Long =
+    footers(spark, s"$dir/$name.parquet").bytes
 
   /** Distinct-value counts for the named columns — the second line of the
     * reference's `.stat` files (src/qp/optimizer/PlanCost.java reads
@@ -158,11 +170,10 @@ object Tables {
   private def statsFile(
       spark: SparkSession, dir: String): Map[String, Map[String, Long]] =
     statsFileCache.getOrElseUpdate(dir, {
-      import org.apache.hadoop.fs.Path
       val path = new Path(s"$dir/$StatsFileName")
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(path)) Map.empty
-      else spark.read.parquet(path.toString)
+      else read(spark, path.toString)
         .select("table", "column", "ndv").collect()
         .groupBy(_.getString(0).toLowerCase)
         .map { case (t, rows) =>
@@ -194,12 +205,11 @@ object Tables {
   def columnRanges(
       spark: SparkSession, dir: String, name: String): Map[String, ColStats] =
     rangeFileCache.getOrElseUpdate(dir, {
-      import org.apache.hadoop.fs.Path
       val path = new Path(s"$dir/$StatsFileName")
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(path)) Map.empty
       else {
-        val df = spark.read.parquet(path.toString)
+        val df = read(spark, path.toString)
         if (!df.columns.contains("min_val")) Map.empty // pre-range artifact
         else df.select("table", "column", "n_rows", "min_val", "max_val", "hist")
           .collect()
@@ -231,18 +241,148 @@ object Tables {
     ndvCache.keys.filter(_._1 == dir).foreach(ndvCache.remove)
   }
 
-  private def footerSum(spark: SparkSession, dir: String, name: String)(
-      f: org.apache.parquet.hadoop.ParquetFileReader => Long): Long = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val path = new Path(s"$dir/$name.parquet")
-    val fs = path.getFileSystem(conf)
-    val files = fs.listStatus(path).filter(_.getPath.getName.endsWith(".parquet"))
-    val fileSeq = if (files.isEmpty) Array(fs.getFileStatus(path)) else files
-    fileSeq.map { st =>
-      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-      try f(in) finally in.close()
-    }.sum
+  /** SQL confs whose values change the schema Spark infers from parquet
+    * footers — part of every metadata memo key.
+    */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles")
+
+  /** Memo key of a path's metadata: its leaf files as (name, length,
+    * modification time), sorted, plus the `SchemaConfs` values.
+    */
+  private final case class ReadKey(
+      files: Seq[(String, Long, Long)], confs: Seq[Option[String]])
+
+  /** Footer sums of one table: rows and row-group uncompressed bytes. */
+  private final case class Footers(rows: Long, bytes: Long)
+
+  private val schemaMemo =
+    new scala.collection.concurrent.TrieMap[String, (ReadKey, StructType)]
+  private val footerMemo =
+    new scala.collection.concurrent.TrieMap[String, (ReadKey, Footers)]
+
+  /** The path's leaf files (empty when the path does not exist) and their
+    * memo key. Listing is driver-side file-system metadata, no job.
+    */
+  private def listing(
+      spark: SparkSession, path: String): (Seq[FileStatus], ReadKey) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files =
+      if (!fs.exists(p)) Seq.empty
+      else {
+        val it = fs.listFiles(p, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toSeq
+      }
+    val key = ReadKey(
+      files.map(st =>
+        (st.getPath.toString, st.getLen, st.getModificationTime)).sorted,
+      SchemaConfs.map(spark.conf.getOption))
+    (files, key)
+  }
+
+  /** The value memoized for `path` under `key`, computing it on a miss.
+    * One entry per path: a changed listing replaces the old entry.
+    */
+  private def memoized[V](
+      memo: scala.collection.concurrent.TrieMap[String, (ReadKey, V)],
+      path: String, key: ReadKey)(compute: => V): V =
+    memo.get(path) match {
+      case Some((k, v)) if k == key => v
+      case _ =>
+        val v = compute
+        memo.put(path, (key, v))
+        v
+    }
+
+  /** The one read path for catalog tables: the schema is read from the
+    * footers once per listing (`footerSchema`) and every read hands it to
+    * Spark, so no read starts a schema-inference job.
+    */
+  private[graft] def read(spark: SparkSession, path: String): DataFrame = {
+    val (files, key) = listing(spark, path)
+    val schema = memoized(schemaMemo, path, key)(
+      footerSchema(spark, path, files))
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** The schema Spark's parquet inference yields for `path`, without its
+    * job. With schema merging off, Spark converts one footer: among the
+    * path's visible leaves sorted by path, the first `_common_metadata`,
+    * else the first `_metadata`, else the first data file. This converts
+    * that footer on the driver with Spark's converter, configured as its
+    * inference configures it. Schema merging and a path with nothing to
+    * read are left to Spark's inference, which also raises its errors.
+    */
+  private def footerSchema(
+      spark: SparkSession, path: String, files: Seq[FileStatus]): StructType = {
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.conf
+    val root = new Path(path)
+    val depth = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(root).depth
+    // Spark's listing skips names starting with `_` or `.` (except the
+    // parquet summary files and `k=v` partition directories) at every
+    // level below the root, and files still being copied
+    def hidden(name: String): Boolean =
+      ((name.startsWith("_") && !name.contains("=")) ||
+        name.startsWith(".") || name.endsWith("._COPYING_")) &&
+        !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
+    val leaves = files.filter { st =>
+      Iterator.iterate(st.getPath)(_.getParent)
+        .take(st.getPath.depth - depth).forall(p => !hidden(p.getName))
+    }.sortBy(_.getPath.toString)
+    def named(n: String) = leaves.find(_.getPath.getName == n)
+    val touch = named("_common_metadata").orElse(named("_metadata"))
+      .orElse(leaves.find(st =>
+        !Set("_common_metadata", "_metadata")(st.getPath.getName)))
+    touch match {
+      case Some(st) if !conf.isParquetSchemaMergingEnabled =>
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = conf.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+          nanosAsLong = conf.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation =
+            conf.parquetReaderRespectUnknownTypeAnnotation)
+        ParquetFileFormat.readSchemaFromFooter(
+          new Footer(st.getPath, footer(spark, st)), converter)
+      case _ => spark.read.parquet(path).schema
+    }
+  }
+
+  /** One file's parquet footer, read as Spark's readers read it. */
+  private def footer(spark: SparkSession, st: FileStatus) = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+    ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(st, spark.sparkContext.hadoopConfiguration),
+      ParquetMetadataConverter.NO_FILTER)
+  }
+
+  /** Row count and uncompressed bytes of `path` in one pass over its
+    * `.parquet` footers (no data scan), memoized like the schema.
+    */
+  private def footers(spark: SparkSession, path: String): Footers = {
+    import scala.jdk.CollectionConverters._
+    val (files, key) = listing(spark, path)
+    memoized(footerMemo, path, key) {
+      val parquet = files.filter(_.getPath.getName.endsWith(".parquet"))
+      require(parquet.nonEmpty, s"no parquet files at $path")
+      val sums = parquet.map { st =>
+        val blocks = footer(spark, st).getBlocks.asScala
+        (blocks.map(_.getRowCount).sum, blocks.map(_.getTotalByteSize).sum)
+      }
+      Footers(sums.map(_._1).sum, sums.map(_._2).sum)
+    }
   }
 }

@@ -2486,6 +2486,10 @@ object Corpus {
     * tokens_per_group² < 2^63 (~3e9 tokens per group); beyond that,
     * pre-divide per term (monotone, no longer oracle-exact).
     *
+    * A group with no tokens in one of the two splits has no distance:
+    * its `tv_dist` is NULL, as in the oracle SQL, not an ANSI
+    * divide-by-zero.
+    *
     * Shape: one (group, token) count with map-side partials — the only
     * string-carrying shuffle — then narrow rollups of those counts.
     */
@@ -2509,8 +2513,9 @@ object Corpus {
       .groupBy(groupCol)
       .agg(max("na").as("n_a_tokens"), max("nb").as("n_b_tokens"),
         count(lit(1)).as("vocab_union"),
-        (sum(abs(col("ca") * col("nb") - col("cb") * col("na"))).cast("double")
-          / (lit(2) * max("na") * max("nb")).cast("double")).as("tv_dist"))
+        try_divide(
+          sum(abs(col("ca") * col("nb") - col("cb") * col("na"))).cast("double"),
+          (lit(2) * max("na") * max("nb")).cast("double")).as("tv_dist"))
   }
 
   /** Global quality-quartile bucketing: assign each document a bucket

@@ -429,7 +429,10 @@ object SpjCompiler {
   }
 
   /** Parse + compile + run against the parquet catalog under `dir`.
-    * Loads only the tables the query references (schema reads are eager).
+    * Loads only the tables the query references. Their schemas, footer
+    * row counts and uncompressed bytes come from [[Tables]]' metadata memo
+    * (keyed by path, file listing and schema-shaping confs), read from
+    * the footers on the driver, so no compile starts a schema job.
     *
     * Distinct-value stats (the reference .stat files' second line) are
     * collected lazily for exactly the attributes the cost model consults —

@@ -398,7 +398,7 @@ object ScaleSmoke {
     // the same prefix-sum shape plus packing's per-group window cumsum
     val epochRow = measure("epoch_build", 15.0, { dir =>
       val e = EpochBuild.build(
-        spark.read.parquet(s"$dir/documents.parquet"),
+        graft.Tables.load(spark, dir, "documents"),
         "doc_id", "text", "smoke0", shardTokens = 2000L, seqLen = 256)
       e.order.write.format("noop").mode("overwrite").save()
       e.boundaries.write.format("noop").mode("overwrite").save()

@@ -196,6 +196,24 @@ class CorpusOpsSpec extends SparkSpec {
     assert(r.getAs[Double]("tv_dist") == 0.25)
   }
 
+  test("splitDrift: a group with an empty test split gets a NULL tv") {
+    // en: train x y (Na=2), test x (Nb=1): (|1-2| + |1-0|) / (2*2*1) = 0.5;
+    // de has train tokens only; fr has only a val document and drops out
+    val docs = idsFor("train", 1).map(id => (id, "x y", "en")) ++
+      idsFor("test", 1).map(id => (id, "x", "en")) ++
+      idsFor("train", 3).drop(1).map(id => (id, "a b", "de")) ++
+      idsFor("val", 1).map(id => (id, "q", "fr"))
+    val rows = Corpus.splitDrift(docs.toDF("doc_id", "text", "lang"),
+        "doc_id", "text", "lang")
+      .orderBy("lang").collect()
+    assert(rows.map(_.getAs[String]("lang")).toSeq == Seq("de", "en"))
+    val de = rows(0)
+    assert(de.getAs[Long]("n_a_tokens") == 4L)
+    assert(de.getAs[Long]("n_b_tokens") == 0L)
+    assert(de.isNullAt(de.fieldIndex("tv_dist")))
+    assert(rows(1).getAs[Double]("tv_dist") == 0.5)
+  }
+
   test("qualityBuckets: quartile boundaries split an ordered corpus 2/2/2/2") {
     // strictly increasing scores: k+1 lowercase tokens, no punct/upper
     val docs = (0 until 8)
