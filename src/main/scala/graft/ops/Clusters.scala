@@ -33,9 +33,15 @@ import org.apache.spark.sql.functions._
   * iterative DataFrame loops otherwise accumulate lineage and re-plan
   * the whole history each action. All shuffled rows are (long, long).
   *
+  * Small graphs never enter the loop: the first edge list is read with
+  * one bounded job, and when it fits `driverFinishEdges` the driver's
+  * union-find returns FINAL labels as a local frame — no label table,
+  * no relabel join, no label fixpoint. The fixpoint runs only after at
+  * least one distributed round, because rounds let labels lag one hop.
+  *
   * At 100 TB the edge list (near-dup pairs) is orders of magnitude
-  * smaller than the corpus; the driver sees only one count per round
-  * (the remaining-edges loop condition), never data.
+  * smaller than the corpus; past that bounded read the driver sees only
+  * one count per round (the remaining-edges loop condition), never data.
   */
 object Clusters {
 
@@ -50,25 +56,39 @@ object Clusters {
       edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
     connectedComponents(edges, srcCol, dstCol, driverFinishEdges = 100000)
 
-  /** As [[connectedComponents]], with the small-remnant finish exposed:
-    * once the contracted edge list fits under `driverFinishEdges`, the
-    * remaining rounds collapse into ONE collect + min-label union-find +
-    * relabel join. Each distributed round costs ~6 scheduled jobs
-    * regardless of size — on a contracted graph of a few thousand rows
-    * that is pure scheduling overhead, and the contraction reaches that
-    * regime after the first round or two on any supercritical graph. The
-    * driver holds ≤ 2·driverFinishEdges longs (sub-MB at the default).
-    * Pass 0 to keep every round distributed.
+  /** As [[connectedComponents]], with the driver finish exposed: once
+    * the (contracted) edge list fits under `driverFinishEdges`, the
+    * remaining rounds collapse into ONE collect + min-label union-find.
+    * Each distributed round costs ~6 scheduled jobs regardless of size —
+    * on a contracted graph of a few thousand rows that is pure scheduling
+    * overhead. The driver holds ≤ 2·driverFinishEdges longs (sub-MB at
+    * the default). Pass 0 to keep every round distributed.
+    *
+    * The first edge list is read with ONE bounded job (`limit(
+    * driverFinishEdges + 1)`). When it fits, the union-find labels are
+    * final and come back as a local frame of `(id, cluster_id)` for every
+    * node: no label table, relabel join or fixpoint runs. Otherwise the
+    * list is counted and the distributed loop starts; its rounds let
+    * labels lag one hop behind the contraction, so those graphs finish
+    * with the label fixpoint below.
     */
   def connectedComponents(
       edges: DataFrame, srcCol: String, dstCol: String,
       driverFinishEdges: Int): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val finishCap = driverFinishEdges.max(0).min(Int.MaxValue - 1)
     val e0 = edges.select(col(srcCol).cast("long").as("u"),
       col(dstCol).cast("long").as("v"))
     // undirected: keep both directions; distinct so parallel edges don't
     // multiply join rows
     var e = e0.union(e0.select(col("v").as("u"), col("u").as("v")))
       .filter(col("u") =!= col("v")).distinct().localCheckpoint()
+    val head = e.limit(finishCap + 1).collect()
+    if (head.length <= finishCap) {
+      freeCheckpoint(e)
+      return minRoots(head).toSeq.toDF("id", "cluster_id")
+    }
 
     // labels: original node -> current representative (starts at itself;
     // the u side of the bidirected list covers every node)
@@ -77,7 +97,7 @@ object Clusters {
 
     var remaining = e.count()
     var rounds = 0
-    while (remaining > driverFinishEdges.toLong.max(0L)) {
+    while (remaining > finishCap) {
       rounds += 1
       require(rounds <= 64, "connectedComponents failed to converge") // 2^64 ids
       // 1. merge map over the current super-graph
@@ -113,26 +133,9 @@ object Clusters {
     if (remaining > 0) {
       // small-remnant finish: one union-find over the collected contracted
       // graph replaces the remaining O(log) distributed rounds
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x // path compression
-        while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      e.select(col("u"), col("v")).collect().foreach { row =>
-        val ru = find(row.getLong(0)); val rv = find(row.getLong(1))
-        if (ru != rv) { // min root wins -> root stays the component minimum
-          if (ru < rv) parent(rv) = ru else parent(ru) = rv
-        }
-      }
-      val relabel = parent.keys.toSeq.map(k => (k, find(k)))
-        .filter { case (k, r) => k != r }
+      val relabel = minRoots(e.collect()).filter { case (k, r) => k != r }
       if (relabel.nonEmpty) {
-        val spark = labels.sparkSession
-        import spark.implicits._
-        val m = broadcast(relabel.toDF("t", "tc"))
+        val m = broadcast(relabel.toSeq.toDF("t", "tc"))
         val oldLabels = labels
         labels = labels.join(m, labels("comp") === m("t"), "left")
           .select(col("id"), coalesce(col("tc"), col("comp")).as("comp"))
@@ -221,6 +224,30 @@ object Clusters {
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** Min-label union-find over collected (u, v) edge rows: every node
+    * that appears in `edges` mapped to the minimum node of its component.
+    */
+  private def minRoots(
+      edges: Array[org.apache.spark.sql.Row]): scala.collection.Map[Long, Long] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x // path compression
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { row =>
+      val u = row.getLong(0); val v = row.getLong(1)
+      parent.getOrElseUpdate(u, u); parent.getOrElseUpdate(v, v)
+      val ru = find(u); val rv = find(v)
+      if (ru != rv) { // min root wins -> root stays the component minimum
+        if (ru < rv) parent(rv) = ru else parent(ru) = rv
+      }
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
 
   private def labelSum(labels: DataFrame): Long =
     labels.agg(sum("comp")).head().getAs[Any](0) match {

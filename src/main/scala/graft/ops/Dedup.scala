@@ -488,7 +488,7 @@ object Dedup {
       fpp: Double = 0.01): DataFrame = {
     val corpusH = corpus.select(xxhash64(col(textCol)).as("h"),
       md5(col(textCol)).as("m"))
-    val bloom = corpusH.stat.bloomFilter("h", expectedItems, fpp)
+    val bloom = bloomFilter(corpusH, "h", expectedItems, fpp)
     val probe = graft.functions.HashExpressions
       .bloomMightContain(xxhash64(col(textCol)), bloom)
     val definiteNew = batch.filter(!probe)
@@ -498,6 +498,24 @@ object Dedup {
       .join(corpusH.select("m"), Seq("m"), "left_anti")
       .drop("m")
     definiteNew.unionByName(verifiedNew)
+  }
+
+  /** `df.stat.bloomFilter(c, expectedItems, fpp)` made total: the same
+    * single `bloom_filter_agg` aggregation, but an EMPTY input yields an
+    * empty filter (every probe answers "no") where Spark's reads the
+    * aggregate's NULL result and throws an NPE — an empty standing corpus
+    * is the first state of every maintained corpus.
+    */
+  private[graft] def bloomFilter(
+      df: DataFrame, c: String, expectedItems: Long, fpp: Double)
+      : org.apache.spark.util.sketch.BloomFilter = {
+    import org.apache.spark.util.sketch.BloomFilter
+    val numBits = BloomFilter.optimalNumOfBits(expectedItems, fpp)
+    val bytes = df.select(org.apache.spark.sql.graftbridge.Bridge.internalFn(
+        "bloom_filter_agg", col(c), lit(expectedItems), lit(numBits)))
+      .head().getAs[Array[Byte]](0)
+    if (bytes == null) BloomFilter.create(expectedItems, numBits)
+    else BloomFilter.readFrom(bytes)
   }
 
   /** Paragraph NORMALIZATION shared by the paragraph-dedup family:
@@ -544,9 +562,10 @@ object Dedup {
       df: DataFrame, textCol: String, idCol: String,
       expectedItems: Long, fpp: Double = 0.01)
       : org.apache.spark.util.sketch.BloomFilter =
-    paraProjection(graft.Tables.spreadIfNarrow(df), textCol, idCol)
-      .select(xxhash64(col("norm")).as("h64"))
-      .stat.bloomFilter("h64", expectedItems, fpp)
+    bloomFilter(
+      paraProjection(graft.Tables.spreadIfNarrow(df), textCol, idCol)
+        .select(xxhash64(col("norm")).as("h64")),
+      "h64", expectedItems, fpp)
 
   /** Paragraph-level exact dedup — the Dolma "BFF" rung (Soldaini et
     * al. 2024 "Dolma", §Dedup; SlimPajama ships the same shape): docs
@@ -850,7 +869,7 @@ object Dedup {
         explode(graft.functions.HashExpressions.ngramHashSet(
           col(textCol), n)).as("gh"))
     val rightGrams = grams(right)
-    val bloom = rightGrams.stat.bloomFilter("gh", expectedItems, fpp)
+    val bloom = bloomFilter(rightGrams, "gh", expectedItems, fpp)
     val probe = graft.functions.HashExpressions
       .bloomMightContain(col("gh"), bloom)
     grams(left).filter(probe).as("a")

@@ -14,14 +14,16 @@ import graft.ops.{Clusters, Dedup}
   *     Bloom-prefiltered exact dedup against the corpus (d09's shape:
   *     definite-new rows admit with zero join work, only might-contain
   *     survivors pay the md5 anti-join).
-  *  2. LINK — near-dup edges for the admitted rows only: cross-relation
-  *     n-gram Jaccard vs the corpus plus within-batch pairs. Work tracks
-  *     the BATCH (inverted-index joins keyed on gram hashes), never the
-  *     corpus pair space.
+  *  2. LINK — near-dup edges for the admitted rows only: ONE
+  *     cross-relation n-gram Jaccard of the admitted rows against
+  *     corpus ∪ admitted, which covers the within-batch pairs too. Work
+  *     tracks the BATCH (inverted-index joins keyed on gram hashes),
+  *     never the corpus pair space.
   *  3. RELABEL — fold the new edges into the standing min-id CC labels
-  *     (d11's contracted supernode loop: cost ∝ touched clusters + new
-  *     ids). Min-id labels compose, so the result equals a full
-  *     recompute (spec-asserted).
+  *     (d11's contracted supernode graph: cost ∝ touched clusters + new
+  *     ids, finished by the driver's union-find when it is batch-sized).
+  *     Min-id labels compose, so the result equals a full recompute
+  *     (spec-asserted).
   *  4. AUDIT — snapshot diff of corpus versions (d13): every admitted id
   *     reports `added`, everything else `unchanged` — the release-audit
   *     artifact of the fold.
@@ -45,6 +47,11 @@ object CorpusMaintain {
   /** One fold's outputs: `admitted` batch rows, the updated `corpus`
     * (old ∪ admitted), updated near-dup `labels` (id, cluster_id), and
     * the version `diff` (id, status).
+    *
+    * Lifetime: `admitted` is an eager local checkpoint that `corpus`
+    * and `diff` read, so the frames are valid until that checkpoint is
+    * unpersisted. Collect or write what the next fold needs before
+    * releasing persisted RDDs.
     */
   final case class Fold(
       admitted: DataFrame,
@@ -63,33 +70,32 @@ object CorpusMaintain {
       tauDen: Int = 2,
       fpp: Double = 0.01): Fold = {
     // 1. admit: collapse the batch to min-id representatives per content
-    // class, then Bloom + exact-verify against the corpus
+    // class, then Bloom + exact-verify against the corpus. Materialized
+    // ONCE: the pair finder, the diff and the caller all read it, and a
+    // lazy frame re-runs the batch dedup, the Bloom probe and the
+    // verify anti-join (and spreadIfNarrow's partition probe) per reader.
     val batchUnique = batch.join(
       Dedup.exact(batch, textCol, idCol)
         .select(col("keep_id").as(idCol)), Seq(idCol))
     val admitted = Dedup.exactIncremental(
       batchUnique, corpus, textCol, idCol, expectedItems, fpp)
+      .localCheckpoint()
+    val newCorpus = corpus.unionByName(admitted)
 
-    // 2. link: near-dup edges touching admitted rows only
-    val crossEdges = Dedup.crossJaccard(
-        admitted, corpus, textCol, idCol, tauNum, tauDen)
+    // 2. link: ONE pair finder, admitted × (corpus ∪ admitted): the
+    // cross edges plus the within-batch ones, the latter in both
+    // orientations and with self-pairs, which incrementalComponents'
+    // undirected, u ≠ v edge set absorbs. admitted × corpus already
+    // dominates admitted × admitted, so the scale class is unchanged.
+    val newEdges = Dedup.crossJaccard(
+        admitted, newCorpus, textCol, idCol, tauNum, tauDen)
       .select(col("id_a"), col("id_b"))
-    // r14: the PPJoin prefix-filtered form — bit-identical to the
-    // uncapped inverted-index join (DedupSpec/OpsSpec equality) with a
-    // completeness proof instead of a hot-gram cap; the maintenance
-    // loop is a standing-corpus production path, so it rides the
-    // ship rung (SURVEY 32ay7), not the d02 oracle configuration
-    val innerEdges = Dedup.prefixJaccard(
-        admitted, textCol, idCol, tauNum, tauDen)
-      .select(col("id_a"), col("id_b"))
-    val newEdges = crossEdges.unionByName(innerEdges)
 
     // 3. relabel: contracted incremental CC over the new edges
     val newLabels = Clusters.incrementalComponents(
       labels, newEdges, "id_a", "id_b")
 
     // 4. audit: version diff (admitted ids report 'added')
-    val newCorpus = corpus.unionByName(admitted)
     val diff = Dedup.snapshotDiff(corpus, newCorpus, idCol, textCol)
 
     Fold(admitted, newCorpus, newLabels, diff)
@@ -120,83 +126,6 @@ object CorpusMaintain {
     standing.select(col("token"), col("cnt"))
       .unionByName(delta)
       .groupBy("token").agg(sum("cnt").as("cnt"))
-  }
-
-  /** One forget's outputs: the shrunk `corpus`, EXACTLY-relabeled
-    * near-dup `labels`, and the `removed` id audit.
-    */
-  final case class Forget(
-      corpus: DataFrame,
-      labels: DataFrame,
-      removed: DataFrame)
-
-  /** Right-to-be-forgotten: remove documents from the standing corpus
-    * AND keep the near-dup cluster labels EXACT — the DELETION leg of
-    * the maintenance loop ([[foldBatch]] is the ingest leg; a training
-    * corpus under GDPR/CCPA or takedown obligations must erase, not
-    * just stop serving). Removing a node can SPLIT a cluster (the
-    * removed doc was the bridge between two near-dup groups), which no
-    * label-only rewrite can express — so affected clusters re-derive
-    * their pair edges among the REMAINING members and re-run CC on
-    * exactly those docs. Work is bounded by Σ|affected cluster|
-    * documents' gram index — cluster-sized, never corpus-sized — and
-    * untouched clusters keep their labels verbatim. Correctness
-    * argument: an edge between an affected-cluster member and any
-    * OTHER doc would have placed them in one cluster originally, so
-    * re-clustering the affected members alone is exact
-    * (spec-asserted ≡ full recompute, including a bridge split).
-    * Idempotent: forgetting the same ids again removes nothing and
-    * leaves labels bit-identical.
-    *
-    * Companions: [[forgetTokenCounts]] subtracts the removed docs from
-    * the standing LM tables; the ANN side is a plain `filter` on the
-    * standing assigned/encoded lists (row deletion — IVF/SQ8/PQ codes
-    * are per-row, no retrain; drift statistics recalibrate at the next
-    * fold).
-    */
-  def forgetBatch(
-      corpus: DataFrame,
-      labels: DataFrame,
-      forgetIds: DataFrame,
-      textCol: String,
-      idCol: String,
-      tauNum: Int = 1,
-      tauDen: Int = 2): Forget = {
-    val ids = forgetIds.select(col(idCol)).distinct()
-    // the audit reports only ids that were actually present
-    val removed = corpus.select(col(idCol)).join(ids, Seq(idCol), "left_semi")
-    val newCorpus = corpus.join(ids, Seq(idCol), "left_anti")
-    val affClusters = labels
-      .join(ids.select(col(idCol).as("id")), Seq("id"), "left_semi")
-      .select("cluster_id").distinct()
-    val keepLabels = labels.join(affClusters, Seq("cluster_id"), "left_anti")
-      .select("id", "cluster_id")
-    val remainingMembers = labels.join(affClusters, Seq("cluster_id"))
-      .select(col("id").as(idCol))
-      .join(ids, Seq(idCol), "left_anti")
-    val remDocs = newCorpus.join(remainingMembers, Seq(idCol), "left_semi")
-    val relabeled = Clusters.connectedComponents(
-      Dedup.prefixJaccard(remDocs, textCol, idCol, tauNum, tauDen),
-      "id_a", "id_b")
-    Forget(newCorpus, keepLabels.unionByName(relabeled), removed)
-  }
-
-  /** Subtract the forgotten docs' token counts from the standing
-    * `(token, cnt)` table — [[foldTokenCounts]]'s inverse (counts are
-    * an abelian group, so forget ≡ recount of the shrunk corpus,
-    * spec-asserted); rows that reach zero are pruned so the table
-    * never leaks that a token ever existed.
-    */
-  def forgetTokenCounts(
-      standing: DataFrame, removedDocs: DataFrame, textCol: String)
-      : DataFrame = {
-    val delta = removedDocs
-      .select(explode(graft.ops.TextOps.tokens(col(textCol))).as("token"))
-      .groupBy("token").agg((-count(lit(1))).as("cnt"))
-    standing.select(col("token"), col("cnt"))
-      .unionByName(delta)
-      .groupBy("token").agg(sum("cnt").as("cnt"))
-      .filter(col("cnt") > 0)
   }
 
   /** The standing quality gate: trained model + the held-out accuracy

@@ -13,6 +13,12 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** A call of one of Spark's internal functions (e.g. the
+    * `bloom_filter_agg` aggregate behind `stat.bloomFilter`).
+    */
+  def internalFn(name: String, inputs: Column*): Column =
+    Column.internalFn(name, inputs: _*)
+
   /** Convert a composed DataFrame-API Column into a plain Catalyst tree
     * (UnresolvedFunction nodes and all) instead of the opaque
     * ColumnNodeExpression wrapper `expression` yields — required when the

@@ -285,6 +285,9 @@ class FunctionsSpec extends SparkSpec {
       expectedItems = 1000L))
     assert(plain.nonEmpty, "fixture must plant leaks")
     assert(bloom == plain)
+    // an empty right side builds an empty filter: no pairs, no error
+    assert(graft.ops.Dedup.crossNGramOverlapBloom(left, right.limit(0),
+      "text", "id", n = 3, expectedItems = 1000L).isEmpty)
   }
 
   test("GraftExtensions registers SQL functions") {

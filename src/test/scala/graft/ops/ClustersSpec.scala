@@ -6,16 +6,65 @@ import org.apache.spark.sql.functions.col
 class ClustersSpec extends SparkSpec {
   import spark.implicits._
 
-  // every case runs BOTH the pure distributed loop (driverFinishEdges=0)
-  // and the hybrid small-remnant finish, and they must agree exactly
+  // every case runs the pure distributed loop (driverFinishEdges=0), the
+  // hybrid (=2: at least one distributed round, then the driver finish
+  // and the label fixpoint) and the default (the whole graph on the
+  // driver), and they must agree exactly
   private def cc(edges: (Long, Long)*): Map[Long, Long] = {
     val df = edges.toDF("a", "b")
-    val dist = Clusters.connectedComponents(df, "a", "b", driverFinishEdges = 0)
-      .as[(Long, Long)].collect().toMap
-    val hybrid = Clusters.connectedComponents(df, "a", "b")
+    def run(finish: Int) = Clusters.connectedComponents(df, "a", "b",
+      driverFinishEdges = finish).as[(Long, Long)].collect().toMap
+    val dist = run(0)
+    val hybrid = run(2)
+    val driver = Clusters.connectedComponents(df, "a", "b")
       .as[(Long, Long)].collect().toMap
     assert(dist == hybrid, s"driver finish diverged: dist=$dist hybrid=$hybrid")
-    hybrid
+    assert(dist == driver, s"driver labels diverged: dist=$dist driver=$driver")
+    driver
+  }
+
+  /** The action behind each job `body` starts: the description of the
+    * job's SQL execution (e.g. "head at Clusters.scala:NNN"). Under AQE
+    * every stage is planned and submitted by an adaptive-execution
+    * thread, so stage names do not say which action ran them; the job's
+    * execution id does. Jobs are taken from a job group with no
+    * description (a description would replace the call site); a sentinel
+    * job in a second group, seen by the same listener, marks the end.
+    */
+  private def jobActions(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val group = s"cc-${java.util.UUID.randomUUID}"
+    val execs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.add(Option(e.properties
+            .getProperty("spark.sql.execution.id")).getOrElse("none"))
+          case Some(g) if g == s"$group-sentinel" => done.countDown()
+          case _ => ()
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          execs.put(s.executionId, s.description)
+        case _ => ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, null)
+      try body finally sc.setJobGroup(s"$group-sentinel", null)
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.toSeq.map(id =>
+      id.toLongOption.flatMap(x => Option(execs.get(x))).getOrElse(s"job($id)"))
   }
 
   test("two disjoint clusters resolve to their min ids") {
@@ -34,6 +83,37 @@ class ClustersSpec extends SparkSpec {
   test("edge direction and duplication don't matter") {
     assert(cc((5L, 2L), (2L, 5L), (5L, 2L), (2L, 9L)) ==
       Map(2L -> 2L, 5L -> 2L, 9L -> 2L))
+  }
+
+  test("an empty edge list yields an empty typed frame on every path") {
+    assert(cc().isEmpty)
+    val got = Clusters.connectedComponents(
+      Seq.empty[(Long, Long)].toDF("a", "b"), "a", "b")
+    assert(got.columns.toSeq == Seq("id", "cluster_id"))
+    assert(got.schema.map(_.dataType.typeName) == Seq("long", "long"))
+  }
+
+  test("a small graph is read with one bounded job and finished on the " +
+    "driver: no count, no label-sum fixpoint") {
+    val df = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
+    var labels = Map.empty[Long, Long]
+    val small = jobActions {
+      labels = Clusters.connectedComponents(df, "a", "b")
+        .as[(Long, Long)].collect().toMap
+    }
+    assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    def at(sites: Seq[String], action: String) =
+      sites.filter(_.startsWith(s"$action at Clusters.scala"))
+    assert(at(small, "head").isEmpty && at(small, "count").isEmpty,
+      s"small graph: $small")
+    assert(at(small, "collect").size == 1, s"small graph: $small")
+    // the distributed loop still counts and runs the fixpoint
+    val dist = jobActions {
+      Clusters.connectedComponents(df, "a", "b", driverFinishEdges = 0)
+        .collect()
+    }
+    assert(at(dist, "head").nonEmpty && at(dist, "count").nonEmpty,
+      s"distributed: $dist")
   }
 
   test("incrementalComponents == full recompute across adversarial batches") {

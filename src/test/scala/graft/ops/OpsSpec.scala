@@ -415,6 +415,11 @@ class DedupSpec extends SparkSpec {
         .select("doc_id").as[Long].collect().toSet
       assert(got == expected, s"fpp=$fpp")
     }
+    // an empty corpus builds an empty filter and admits the whole batch
+    val intoEmpty = Dedup.exactIncremental(batch, corpus.limit(0),
+        "text", "doc_id", expectedItems = 50L)
+      .select("doc_id").as[Long].collect().toSet
+    assert(intoEmpty == batch.select("doc_id").as[Long].collect().toSet)
   }
 
   test("nGramJaccard finds exact and near duplicates, not distinct docs") {

@@ -152,6 +152,9 @@ class CorpusStreamSpec extends SparkSpec {
     val standing = Dedup.paragraphHashSet(corpus, "text", "doc_id")
     // fpp 0.5 floods the maybe-leg so BOTH legs carry traffic
     val bloom = Dedup.paragraphBloom(corpus, "text", "doc_id", 8L, 0.5)
+    // an empty standing corpus builds an empty filter: every probe is new
+    assert(!Dedup.paragraphBloom(corpus.limit(0), "text", "doc_id", 8L, 0.5)
+      .mightContainLong(0L))
     val probes = Seq(
       (1L, "Known One\nfresh a"),       // case variant of known: drops
       (2L, "totally new\nKNOWN THREE"),

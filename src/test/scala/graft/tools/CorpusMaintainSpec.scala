@@ -45,6 +45,41 @@ class CorpusMaintainSpec extends SparkSpec {
     assert(incremental == full && full == Map(1L -> 1L, 2L -> 1L, 14L -> 1L))
   }
 
+  private def labelsOf(df: DataFrame): Map[Long, Long] =
+    df.select("id", "cluster_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def fullRecompute(corpus: DataFrame): Map[Long, Long] =
+    labelsOf(Clusters.connectedComponents(
+      Dedup.nGramJaccard(corpus, "text", "doc_id", 1, 2), "id_a", "id_b"))
+
+  test("admitted rows that are near-dups of each other only form one new " +
+    "cluster (the within-batch edges come from the same pair finder)") {
+    val b = Seq(
+      (20L, "k l m n"),   // near-dup of 21 only (jaccard 2/4)
+      (21L, "k l m o"),
+      (22L, "a b c d z")) // near-dup of corpus doc 1 (3/4)
+      .toDF("doc_id", "text")
+    val f = CorpusMaintain.foldBatch(corpus0, labels0, b,
+      "text", "doc_id", expectedItems = 100L)
+    val got = labelsOf(f.labels)
+    assert(got == fullRecompute(f.corpus))
+    assert(got(20L) == 20L && got(21L) == 20L && got(22L) == 1L)
+  }
+
+  test("a fold into an EMPTY standing corpus admits every min-id " +
+    "representative and labels equal a full recompute") {
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val noLabels = Seq.empty[(Long, Long)].toDF("id", "cluster_id")
+    val f = CorpusMaintain.foldBatch(empty, noLabels, batch,
+      "text", "doc_id", expectedItems = 100L)
+    assert(f.admitted.collect().map(_.getLong(0)).toSet ==
+      Set(10L, 11L, 12L, 14L, 15L))
+    val got = labelsOf(f.labels)
+    assert(got == fullRecompute(f.corpus) && got == Map(11L -> 11L, 14L -> 11L))
+    assert(f.diff.filter("status != 'added'").isEmpty)
+  }
+
   test("diff reports admitted ids as added, standing ids as unchanged") {
     val d = fold().diff.collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
