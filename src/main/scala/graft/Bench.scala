@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main. Runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, printing one JSON line with per-query seconds.
   *
@@ -25,12 +23,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val cpus = Session.defaultCpus
+    val spark = Session.builder(cpus)
       // dozens of queries run in this one JVM: keep status-listener state
       // small so late queries aren't measured against accumulated debt
       .config("spark.sql.ui.retainedExecutions", "2")
@@ -58,26 +52,8 @@ object Bench {
         // across 60+ queries × reps that debt skews later timings (r4:
         // d08 spread 72 s). Nothing references them once the query's
         // action is done — drop them eagerly.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
+        Session.release(spark)
       }
-    }
-
-    // Hygiene barrier between timed reps (r11 driver bench: t37 reps grew
-    // [9.3, 15.9, 31.8] s in the 218-query shared JVM while isolated runs sat
-    // flat at ~5.8 s — accumulated heap/cleaner debt, not the plan). Shuffle
-    // and broadcast cleanup in Spark is GC-driven (ContextCleaner polls a
-    // reference queue), so a single System.gc() may enqueue the cleanups but
-    // not leave time for the async cleaner to drain them before the next rep
-    // starts allocating. Two GCs with a short drain window empties the queue.
-    def barrier(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
-      System.gc()
-      Thread.sleep(200)
-      System.gc()
     }
 
     // calibration: fixed CPU+shuffle work whose true cost is host-invariant;
@@ -85,7 +61,7 @@ object Bench {
     def calibrationOnce(): Double = {
       System.gc()
       val t0 = System.nanoTime()
-      spark.range(0L, 30000000L, 1L, cpus.toInt * 4)
+      spark.range(0L, 30000000L, 1L, cpus * 4)
         .selectExpr("xxhash64(id) AS h", "pmod(xxhash64(id, 7), 1000000) AS k")
         .groupBy("k")
         .agg(org.apache.spark.sql.functions.max("h"),
@@ -113,9 +89,9 @@ object Bench {
     def shuffleCalibrationOnce(): Double = {
       System.gc()
       val t0 = System.nanoTime()
-      spark.range(0L, 8000000L, 1L, cpus.toInt)
+      spark.range(0L, 8000000L, 1L, cpus)
         .selectExpr("id", "md5(cast(id as string)) AS s")
-        .repartition(cpus.toInt,
+        .repartition(cpus,
           org.apache.spark.sql.functions.col("id"))
         .selectExpr("pmod(xxhash64(s), 64) AS k", "s")
         .groupBy("k")
@@ -169,12 +145,15 @@ object Bench {
 
     val results = names.map { name =>
       def rep(): Double = {
-        barrier()
+        // hygiene barrier between timed reps (r11 driver bench: t37 reps
+        // grew [9.3, 15.9, 31.8] s in the 218-query shared JVM while
+        // isolated runs sat flat at ~5.8 s — heap/cleaner debt, not the plan)
+        Session.barrier(spark)
         val t0 = System.nanoTime()
         val ok = exec(name, sfDir)
         if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       }
-      val sb0 = { barrier(); shuffleBytes.get() } // barrier drains the bus
+      val sb0 = { Session.barrier(spark); shuffleBytes.get() } // barrier drains the bus
       val first = (1 to reps).map(_ => rep())
       val primed = first.size >= 2 && first.head > primeSec &&
         first.head > primeRatio * first(1) && first(1) >= 0
@@ -185,7 +164,7 @@ object Bench {
       val spread = if (good.isEmpty) -1.0 else good.last - good.head
       if (primed) System.err.println(
         f"[bench] $name: rep1 ${first.head}%.1fs treated as priming (steady ${median}%.1fs)")
-      barrier()
+      Session.barrier(spark)
       val shuffleMb = (shuffleBytes.get() - sb0).toDouble /
         math.max(times.size, 1) / 1048576.0
       (name, median, spread, times, shuffleMb)

@@ -21,14 +21,7 @@ object SpjMain {
     val args = if (explain) args0.drop(1) else args0
     require(args.length >= 2,
       "usage: SpjMain [--explain] <query.sql | inline query text> <tableDir> [outDir]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     if (explain) println(explainText(spark, args(0), args(1)))
     else execute(spark, args(0), args(1), args.lift(2))
     spark.stop()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.EventPipeline
 
 /** Demo/verification main: drives the streaming pipeline end-to-end over
@@ -12,13 +10,7 @@ import graft.streaming.EventPipeline
 object StreamVerify {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val q = EventPipeline.hourlyCounts(EventPipeline.readEventStream(spark, dir))
       .writeStream.format("memory").queryName("drive")
       .outputMode("update").start()

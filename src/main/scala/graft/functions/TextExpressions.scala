@@ -1190,9 +1190,10 @@ object TextExpressions {
 
 /** Fused main-content extraction (Kohlschütter et al. WSDM 2010
   * NumWords/LinkDensity rules) — ONE pass over the page replacing the
-  * interpreted higher-order-function stack in TextOps.densityExtractHof.
-  * That stack was O(lines²) per document: the keep-rule `filter` lambda
-  * read its neighbor features through `element_at(wordsArr, i)` where
+  * interpreted higher-order-function stack (FusedDensityExtractSpec keeps
+  * it as its oracle). That stack was O(lines²) per document: the keep-rule
+  * `filter` lambda read its neighbor features through
+  * `element_at(wordsArr, i)` where
   * `wordsArr` was an UNMATERIALIZED `transform(transform(split(page)))`
   * tree, so every per-line probe re-ran the full tag-strip + tokenize
   * over all lines — with the page-construction expression inlined below

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Duplicate-cluster resolution: the step between pair FINDING (Dedup's
   * inverted-index / LSH joins emit near-dup PAIRS) and actual corpus
@@ -221,7 +222,7 @@ object Clusters {
   private[ops] def freeCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
+        Bridge.freeBlocks(lr.rdd)
       case _ => ()
     }
 

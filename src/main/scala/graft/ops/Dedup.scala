@@ -1239,23 +1239,6 @@ object Dedup {
         xxhash64(col("w")).as("h1"),
         xxhash64(lit(0x5bd1e995L), col("w")).as("h2"))
 
-  /** The pre-r16 HOF formulation — the reference
-    * [[spanWindowProjection]] is spec-gated against.
-    */
-  private[graft] def spanWindowProjectionHof(
-      df: DataFrame, textCol: String, idCol: String, n: Int): DataFrame = {
-    val toks = split(col(textCol), " ")
-    df.select(col(idCol).as("id"), toks.as("t"))
-      .select(col("id"), posexplode(
-        when(size(col("t")) >= n,
-          transform(sequence(lit(0), size(col("t")) - n),
-            p => concat_ws(" ", slice(col("t"), p + 1, lit(n)))))
-          .otherwise(array().cast("array<string>"))).as(Seq("pos", "w")))
-      .select(col("id"), col("pos"),
-        xxhash64(col("w")).as("h1"),
-        xxhash64(lit(0x5bd1e995L), col("w")).as("h2"))
-  }
-
   /** The corpus-hot span table `(h1, h2)` — every n-token window whose
     * DOCUMENT frequency exceeds `maxSpanDf` (a span repeated within one
     * doc counts once). Exposed so a standing corpus can FREEZE its

@@ -772,8 +772,8 @@ object TextOps {
 
   /** Fused (extract, n_lines) struct — ONE pass over the page
     * ([[graft.functions.DensityExtractExpr]]). r16: the former
-    * higher-order-function formulation ([[densityExtractHof]], kept as
-    * the spec oracle) was O(lines²) per document — the keep-rule filter
+    * higher-order-function formulation (FusedDensityExtractSpec keeps it
+    * as its oracle) was O(lines²) per document — the keep-rule filter
     * lambda re-evaluated the whole unmaterialized transform stack per
     * `element_at` neighbor probe (guide §4; t36's two map stages held
     * 24.6 s task-time at sf0.1). Callers that also need the line count
@@ -781,35 +781,6 @@ object TextOps {
     */
   def densityExtractStats(page: Column): Column =
     graft.functions.TextExpressions.densityExtract(page)
-
-  /** The pre-r16 HOF formulation — the reference the fused expression
-    * is spec-gated against (FusedDensityExtractSpec).
-    */
-  private[graft] def densityExtractHof(page: Column): Column = {
-    val lines = split(page, "\n")
-    val cleanArr = transform(lines,
-      l => regexp_replace(l, "<[^>]+>", ""))
-    val wordsArr = transform(cleanArr,
-      l => size(filter(split(l, " "), w => w =!= lit(""))))
-    val anchorArr = transform(lines, l => anchorChars(l))
-    val clenArr = transform(cleanArr, l => length(l))
-    val n = size(lines)
-    def w(i: Column) = element_at(wordsArr, i)
-    def a(i: Column) = element_at(anchorArr, i)
-    def c(i: Column) = element_at(clenArr, i)
-    val kept = filter(cleanArr, (l, i0) => {
-      val i = i0 + 1 // element_at is 1-based; i0 is the 0-based index
-      val curLdOk = a(i) * 3 <= c(i)
-      val prevLdOk = when(i0 === 0, lit(true))
-        .otherwise(a(i - 1) * 9 <= c(i - 1) * 5)
-      val pw = when(i0 === 0, lit(0)).otherwise(w(i - 1))
-      val nw = when(i0 === n - 1, lit(0)).otherwise(w(i + 1))
-      curLdOk && when(prevLdOk, w(i) > 16 || nw > 15 || pw > 4)
-        .otherwise(w(i) > 40 || nw > 17)
-    })
-    when(size(kept) === 0, lit(null).cast("string"))
-      .otherwise(concat_ws("\n", kept))
-  }
 
   /** Composite quality score in [0,1]: integer counts combined with double
     * divisions in a FIXED expression shape (mirrored in the oracle SQL).

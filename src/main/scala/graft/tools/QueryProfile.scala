@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -12,22 +11,15 @@ import scala.collection.mutable.ArrayBuffer
   * guide-§1 "which stage is the time going to" loop for a headless host
   * where the Spark UI is off.
   *
-  * Usage: runMain graft.tools.QueryProfile d02_dedup_jaccard[,t37_...] [sfDir] [cpus]
+  * Usage: runMain graft.tools.QueryProfile d02_dedup_jaccard[,t37_...] [sfDir]
+  * (env SPARK_GRAFT_CPUS)
   */
 object QueryProfile {
   def main(args: Array[String]): Unit = {
     val names = args.headOption.map(_.split(",").toSeq)
       .getOrElse(Seq("q06_join4_filter_sort"))
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val cpus = args.lift(2).getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     final case class St(id: Int, name: String, wallMs: Long, taskMs: Long,
         tasks: Int, shufReadMb: Double, shufWriteMb: Double,
@@ -72,17 +64,12 @@ object QueryProfile {
       val run = graft.SparkEntry.queries(n)
       // warm rep: JIT + codegen + page cache, untimed (the Bench contract)
       run(spark, dir).write.format("noop").mode("overwrite").save()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
-      System.gc(); Thread.sleep(200); System.gc()
+      graft.Session.barrier(spark)
       stages.synchronized(stages.clear())
       val t0 = System.nanoTime()
       run(spark, dir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      graft.Session.release(spark)
       val snap = stages.synchronized(stages.toVector)
       println(f"==== $n: ${wall}%.2f s wall, ${snap.size} stages, " +
         f"${snap.map(_.taskMs).sum / 1e3}%.1f s task-time ====")

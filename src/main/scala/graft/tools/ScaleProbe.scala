@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Clusters, Corpus, Dedup, Events, VectorOps}
@@ -39,13 +38,7 @@ import graft.ops.{Clusters, Corpus, Dedup, Events, VectorOps}
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     def timed(f: => Long): (Long, Double) = {
       val t0 = System.nanoTime()
@@ -56,8 +49,7 @@ object ScaleProbe {
       // case's action completes, and two 50M checkpoints resident at once
       // starve execution memory in the 8g probe heap (r7 OOM) — drop
       // eagerly, outside the timed region (the Bench convention)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.Session.release(spark)
       (out, dt)
     }
 

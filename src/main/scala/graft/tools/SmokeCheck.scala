@@ -1,13 +1,9 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Replicates the driver's smoke gate: SparkEntry.entry must return >0
   * rows on sf0.001. */
 object SmokeCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val n = graft.SparkEntry.entry(spark).count()
     println(s"SMOKE_ROWS=$n")
     spark.stop()

@@ -432,22 +432,12 @@ object TableTools {
 object RandomTableGen {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: RandomTableGen <schema> <rows> <outDir> [seed]")
-    val spark = local()
+    val spark = graft.Session.local()
     TableTools.randomTable(spark, args(0), args(1).toLong,
         if (args.length > 3) args(3).toLong else 42L)
       .write.mode("overwrite").parquet(args(2))
     println(s"[gen] wrote ${args(1)} rows to ${args(2)}")
     spark.stop()
-  }
-
-  private[tools] def local(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 }
 
@@ -464,7 +454,7 @@ object RandomTableGen {
 object JsonlToParquet {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: JsonlToParquet <in.jsonl> <schema|infer> <outDir>")
-    val spark = RandomTableGen.local()
+    val spark = graft.Session.local()
     val df = jsonl(spark, args(0), if (args(1) == "infer") None else Some(args(1)))
     df.write.mode("overwrite").parquet(args(2))
     println(s"[jsonl] wrote ${args(2)}")
@@ -504,7 +494,7 @@ object JsonlToParquet {
 object OrcConvert {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: OrcConvert <inDir> <outDir>")
-    val spark = RandomTableGen.local()
+    val spark = graft.Session.local()
     val n = convert(spark, args(0), args(1))
     println(s"[orc] wrote ${args(1)} ($n rows)")
     spark.stop()
@@ -561,7 +551,7 @@ object AvroConvert {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: AvroConvert <inDir> <outDir>")
-    val spark = RandomTableGen.local()
+    val spark = graft.Session.local()
     val n = convert(spark, args(0), args(1))
     println(s"[avro] wrote ${args(1)} ($n rows)")
     spark.stop()
@@ -722,7 +712,7 @@ object AvroConvert {
 object CsvToParquet {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: CsvToParquet <in.csv> <schema|header> <outDir>")
-    val spark = RandomTableGen.local()
+    val spark = graft.Session.local()
     val reader = spark.read.option("delimiter", ",")
     val df =
       if (args(1) == "header")

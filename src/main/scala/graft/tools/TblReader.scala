@@ -576,7 +576,7 @@ object TblExport {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
       "usage: TblExport <parquetDir> <table> <outDir>")
-    val spark = RandomTableGen.local()
+    val spark = graft.Session.local()
     val df = graft.Tables.load(spark, args(0), args(1))
     val (t, m) = TblWriter.exportTbl(df, args(1).toUpperCase, args(2))
     println(s"[tbl] wrote $t and $m")
@@ -592,7 +592,7 @@ object TblToParquet {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
       "usage: TblToParquet <table.tbl> <table.md> <outDir>")
-    val spark = RandomTableGen.local()
+    val spark = graft.Session.local()
     val df = TblReader.loadTbl(spark, args(0), args(1))
     df.write.mode("overwrite").parquet(args(2))
     println(s"[tbl] wrote ${args(2)}")

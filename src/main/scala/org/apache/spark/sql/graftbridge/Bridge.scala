@@ -29,6 +29,18 @@ object Bridge {
   def unresolvedExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** Drop an RDD's cached blocks and its entry in the persistence list,
+    * without blocking. A materialized checkpoint is freed through
+    * `SparkContext.unpersistRDD`: `RDD.unpersist` logs a WARN on every
+    * locally checkpointed RDD that its lineage is truncated, and freeing
+    * a checkpoint nobody reads again is the point. Other RDDs take
+    * `RDD.unpersist`, which also resets their storage level.
+    */
+  def freeBlocks(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    if (rdd.isCheckpointed)
+      rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+    else rdd.unpersist(blocking = false)
+
   /** Runtime function registration on an EXISTING session (the
     * spark.sql.extensions config path only applies to sessions created
     * after the config is set).

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -7,12 +8,41 @@ import graft.ops.TextOps
 
 /** Gates the r16 fused density extraction ([[DensityExtractExpr]])
   * STRICTLY against the pre-r16 higher-order-function formulation
-  * (`TextOps.densityExtractHof`) — same keep rules, same regexes, same
+  * (`densityExtractHof` below) — same keep rules, same regexes, same
   * code-point length semantics, NULL extract when no line survives —
   * and the struct's n_lines against `size(split(page, "\n"))`.
   */
 class FusedDensityExtractSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The pre-r16 HOF formulation — the reference the fused expression
+    * is gated against.
+    */
+  private def densityExtractHof(page: Column): Column = {
+    val lines = split(page, "\n")
+    val cleanArr = transform(lines,
+      l => regexp_replace(l, "<[^>]+>", ""))
+    val wordsArr = transform(cleanArr,
+      l => size(filter(split(l, " "), w => w =!= lit(""))))
+    val anchorArr = transform(lines, l => TextOps.anchorChars(l))
+    val clenArr = transform(cleanArr, l => length(l))
+    val n = size(lines)
+    def w(i: Column) = element_at(wordsArr, i)
+    def a(i: Column) = element_at(anchorArr, i)
+    def c(i: Column) = element_at(clenArr, i)
+    val kept = filter(cleanArr, (l, i0) => {
+      val i = i0 + 1 // element_at is 1-based; i0 is the 0-based index
+      val curLdOk = a(i) * 3 <= c(i)
+      val prevLdOk = when(i0 === 0, lit(true))
+        .otherwise(a(i - 1) * 9 <= c(i - 1) * 5)
+      val pw = when(i0 === 0, lit(0)).otherwise(w(i - 1))
+      val nw = when(i0 === n - 1, lit(0)).otherwise(w(i + 1))
+      curLdOk && when(prevLdOk, w(i) > 16 || nw > 15 || pw > 4)
+        .otherwise(w(i) > 40 || nw > 17)
+    })
+    when(size(kept) === 0, lit(null).cast("string"))
+      .otherwise(concat_ws("\n", kept))
+  }
 
   private val anchors = Seq(
     "<a href=\"/\">home</a>", "<a>x</a>", "<a class=\"z\"></a>",
@@ -42,7 +72,7 @@ class FusedDensityExtractSpec extends SparkSpec {
     val df = pages.toDF("page")
     val rows = df.select(
         TextOps.densityExtractStats(col("page")).as("de"),
-        TextOps.densityExtractHof(col("page")).as("hof"),
+        densityExtractHof(col("page")).as("hof"),
         size(split(col("page"), "\n")).as("nl"))
       .select(col("de.extract"), col("hof"), col("de.n_lines"), col("nl"))
       .collect()

@@ -1,12 +1,13 @@
 package graft.functions
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
 /** Gates the r16 fused raw-split window index
   * (`Dedup.spanWindowProjection` via [[NGramList]] keepEmpty) STRICTLY
-  * against the pre-r16 HOF formulation (`spanWindowProjectionHof`) —
+  * against the pre-r16 HOF formulation (`spanWindowProjectionHof` below) —
   * including the raw `split(" ", -1)` edge semantics the scrub rebuild
   * gather depends on: empty segments from consecutive / leading /
   * trailing spaces occupy POSITIONS, and window hashes must line up
@@ -14,6 +15,23 @@ import graft.SparkSpec
   */
 class FusedSpanWindowSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The pre-r16 HOF formulation — the reference
+    * `Dedup.spanWindowProjection` is gated against.
+    */
+  private def spanWindowProjectionHof(
+      df: DataFrame, textCol: String, idCol: String, n: Int): DataFrame = {
+    val toks = split(col(textCol), " ")
+    df.select(col(idCol).as("id"), toks.as("t"))
+      .select(col("id"), posexplode(
+        when(size(col("t")) >= n,
+          transform(sequence(lit(0), size(col("t")) - n),
+            p => concat_ws(" ", slice(col("t"), p + 1, lit(n)))))
+          .otherwise(array().cast("array<string>"))).as(Seq("pos", "w")))
+      .select(col("id"), col("pos"),
+        xxhash64(col("w")).as("h1"),
+        xxhash64(lit(0x5bd1e995L), col("w")).as("h2"))
+  }
 
   private val texts: Seq[String] = Seq(
     "", " ", "  ", "a", "a b", "a b c d e f",
@@ -37,8 +55,8 @@ class FusedSpanWindowSpec extends SparkSpec {
     for (n <- Seq(2, 3, 5)) {
       val fused = canon(graft.ops.Dedup
         .spanWindowProjection(df, "text", "doc_id", n).collect())
-      val hof = canon(graft.ops.Dedup
-        .spanWindowProjectionHof(df, "text", "doc_id", n).collect())
+      val hof = canon(
+        spanWindowProjectionHof(df, "text", "doc_id", n).collect())
       assert(fused == hof, s"n=$n mismatch")
       assert(fused.nonEmpty)
     }

@@ -23,50 +23,6 @@ class ClustersSpec extends SparkSpec {
     driver
   }
 
-  /** The action behind each job `body` starts: the description of the
-    * job's SQL execution (e.g. "head at Clusters.scala:NNN"). Under AQE
-    * every stage is planned and submitted by an adaptive-execution
-    * thread, so stage names do not say which action ran them; the job's
-    * execution id does. Jobs are taken from a job group with no
-    * description (a description would replace the call site); a sentinel
-    * job in a second group, seen by the same listener, marks the end.
-    */
-  private def jobActions(body: => Unit): Seq[String] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-      SparkListenerJobStart}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    val sc = spark.sparkContext
-    val group = s"cc-${java.util.UUID.randomUUID}"
-    val execs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.add(Option(e.properties
-            .getProperty("spark.sql.execution.id")).getOrElse("none"))
-          case Some(g) if g == s"$group-sentinel" => done.countDown()
-          case _ => ()
-        }
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart =>
-          execs.put(s.executionId, s.description)
-        case _ => ()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, null)
-      try body finally sc.setJobGroup(s"$group-sentinel", null)
-      sc.parallelize(Seq(1), 1).count()
-      sc.clearJobGroup()
-      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    jobs.asScala.toSeq.map(id =>
-      id.toLongOption.flatMap(x => Option(execs.get(x))).getOrElse(s"job($id)"))
-  }
-
   test("two disjoint clusters resolve to their min ids") {
     val got = cc((1L, 2L), (2L, 3L), (10L, 11L))
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
@@ -108,12 +64,21 @@ class ClustersSpec extends SparkSpec {
       s"small graph: $small")
     assert(at(small, "collect").size == 1, s"small graph: $small")
     // the distributed loop still counts and runs the fixpoint
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    var out = df
     val dist = jobActions {
-      Clusters.connectedComponents(df, "a", "b", driverFinishEdges = 0)
-        .collect()
+      out = Clusters.connectedComponents(df, "a", "b", driverFinishEdges = 0)
+      out.collect()
     }
     assert(at(dist, "head").nonEmpty && at(dist, "count").nonEmpty,
       s"distributed: $dist")
+    // every round's checkpoint is freed; only the returned labels' stays
+    val kept = out.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }
+    assert(kept.size == 1 && sc.getPersistentRDDs.keySet -- before == kept.toSet,
+      s"persisted ${sc.getPersistentRDDs.keySet -- before}, returned $kept")
   }
 
   test("incrementalComponents == full recompute across adversarial batches") {

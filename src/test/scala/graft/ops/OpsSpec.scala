@@ -943,8 +943,7 @@ class DedupSpec extends SparkSpec {
 
   test("contaminationHops: no lingering cached intermediates — a shared " +
     "session keeps only the caller-owned result cache") {
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    graft.Session.release(spark)
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
     val seeds = Seq(1L).toDF("doc_id")
     val got = graft.ops.Dedup.contaminationHops(edges, seeds, "doc_id",
@@ -957,19 +956,13 @@ class DedupSpec extends SparkSpec {
     assert(got.count() == 3)
     // a checkpoint's storage lives on the RDD inside the LogicalRDD
     // plan (Dataset.unpersist only touches cache-manager entries)
-    got.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = true)
-      case other => fail(s"expected LogicalRDD, got ${other.getClass}")
-    }
+    Clusters.freeCheckpoint(got)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
   test("d39_threshold_sweep: no lingering pair-frame cache — a library " +
     "caller's session keeps only the result's own checkpoint blocks") {
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    spark.catalog.clearCache()
+    graft.Session.release(spark)
     val res = graft.SparkEntry.queries("d39_threshold_sweep")(
       spark, "/root/testdata/sf0.001")
     // the query persists its O(pairs) frame internally; the eager

@@ -128,7 +128,6 @@ class SpjCompilerSpec extends SparkSpec {
 
   test("compiles start no schema jobs, cold or warm; a rewritten table is re-read") {
     import graft.Tables
-    val sc = spark.sparkContext
     val tmp = java.nio.file.Files.createTempDirectory("graft_warm").toString
     spark.range(200).selectExpr("id AS k", "id % 7 AS a")
       .coalesce(1).write.parquet(s"$tmp/wf.parquet")
@@ -136,31 +135,14 @@ class SpjCompilerSpec extends SparkSpec {
       .coalesce(1).write.parquet(s"$tmp/wd.parquet")
     val sql = "SELECT WF.a, WD.b FROM WF, WD WHERE WF.k = WD.k"
 
-    // call site of each job `body` starts (its stages' name), read back
-    // through the status tracker; a sentinel job in a second group is seen
-    // only after every earlier job event, so the list is complete
-    def jobSites(body: => Unit): Seq[String] = {
-      val group = s"warm-${java.util.UUID.randomUUID}"
-      sc.setJobGroup(group, "jobs under test")
-      try body finally sc.setJobGroup(s"$group-sentinel", "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (sc.statusTracker.getJobIdsForGroup(s"$group-sentinel").isEmpty &&
-          System.nanoTime() < deadline) Thread.sleep(10)
-      assert(sc.statusTracker.getJobIdsForGroup(s"$group-sentinel").nonEmpty)
-      sc.statusTracker.getJobIdsForGroup(group).toSeq.map { j =>
-        sc.statusTracker.getJobInfo(j).flatMap(_.stageIds.headOption)
-          .flatMap(sc.statusTracker.getStageInfo).map(_.name)
-          .getOrElse(s"job $j")
-      }
-    }
+    // the schema-inference job runs outside any SQL execution, so it is
+    // named by its stage's call site
     def schemaJobs(sites: Seq[String]): Seq[String] =
       sites.filter(_.startsWith("parquet at Tables.scala"))
 
-    val cold = jobSites(SpjCompiler.run(spark, tmp, sql))
+    val cold = jobActions(SpjCompiler.run(spark, tmp, sql))
     assert(schemaJobs(cold).isEmpty, s"cold compile: $cold")
-    val warm = jobSites(SpjCompiler.run(spark, tmp, sql))
+    val warm = jobActions(SpjCompiler.run(spark, tmp, sql))
     assert(warm.isEmpty, s"warm compile started jobs: $warm")
     assert(SpjCompiler.run(spark, tmp, sql).count() == 50)
 
@@ -168,7 +150,7 @@ class SpjCompilerSpec extends SparkSpec {
     val bytesBefore = Tables.uncompressedBytes(spark, tmp, "wf")
     spark.range(500).selectExpr("id AS k", "id % 7 AS a", "id * 2 AS c")
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/wf.parquet")
-    val reread = jobSites {
+    val reread = jobActions {
       assert(Tables.load(spark, tmp, "wf").columns.toSeq == Seq("k", "a", "c"))
     }
     assert(reread.isEmpty, s"rewritten table: $reread")
