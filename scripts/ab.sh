@@ -17,10 +17,11 @@
 # alternates from pair to pair, so a drifting host does not favour one
 # side. Each run's last line (perfbench's result JSON) is kept as
 # $AB_OUT/<side>_<workload>_<seed>.json; at the end every end-to-end
-# metric is printed per pair, with both sides' Q1/median/Q3 and the
-# number of pairs the change won.
+# metric (every per-layer metric when AB_TRACE=1, since a traced run
+# reports only those) is printed per pair, with both sides'
+# Q1/median/Q3 and the number of pairs the change won.
 set -euo pipefail
-[ $# -ge 2 ] || { sed -n '2,20p' "$0"; exit 2; }
+[ $# -ge 2 ] || { sed -n '2,22p' "$0"; exit 2; }
 workload=$1; shift
 here=$(cd "$(dirname "$0")/.." && pwd)
 out=${AB_OUT:-${TMPDIR:-/tmp}/graft-ab}
@@ -55,10 +56,11 @@ for seed in "$@"; do
   i=$((i + 1))
 done
 
-python3 - "$out" "$workload" "$here/BENCHMARK.json" "$@" <<'EOF'
+python3 - "$out" "$workload" "$here/BENCHMARK.json" "${AB_TRACE:-0}" "$@" <<'EOF'
 import json, statistics, sys
-out, workload, spec, seeds = sys.argv[1], sys.argv[2], sys.argv[3], sys.argv[4:]
-metrics = json.load(open(spec))["end_to_end"]
+out, workload, spec, trace = sys.argv[1:5]
+seeds = sys.argv[5:]
+metrics = json.load(open(spec))["per_layer" if trace == "1" else "end_to_end"]
 
 def load(side, seed):
     try:
@@ -83,8 +85,8 @@ for m in metrics:
     rows = [(s, p["metrics"].get(name, {}).get("value"),
              c["metrics"].get(name, {}).get("value")) for s, p, c in pairs]
     rows = [r for r in rows if r[1] is not None and r[2] is not None]
-    if not rows:
-        continue
+    if not any(a or b for _, a, b in rows):
+        continue  # a layer this workload does not run
     print(f"{name} ({m['unit']}), parent/change per seed:")
     print("  " + ", ".join(f"{s} {a:g}/{b:g}" for s, a, b in rows))
     pa, ch = [r[1] for r in rows], [r[2] for r in rows]
@@ -94,6 +96,7 @@ for m in metrics:
           f"(IQR {qp[2] - qp[0]:.4g})")
     print(f"  change Q1/median/Q3 {qc[0]:.4g}/{qc[1]:.4g}/{qc[2]:.4g} "
           f"(IQR {qc[2] - qc[0]:.4g})")
-    print(f"  change/parent median {qc[1] / qp[1]:.3f}; "
+    ratio = f"{qc[1] / qp[1]:.3f}" if qp[1] else "n/a"
+    print(f"  change/parent median {ratio}; "
           f"change better in {wins}/{len(rows)} pairs")
 EOF

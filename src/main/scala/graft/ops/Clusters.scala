@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -34,11 +36,14 @@ import org.apache.spark.sql.graftbridge.Bridge
   * iterative DataFrame loops otherwise accumulate lineage and re-plan
   * the whole history each action. All shuffled rows are (long, long).
   *
-  * Small graphs never enter the loop: the first edge list is read with
-  * one bounded job, and when it fits `driverFinishEdges` the driver's
-  * union-find returns FINAL labels as a local frame — no label table,
-  * no relabel join, no label fixpoint. The fixpoint runs only after at
-  * least one distributed round, because rounds let labels lag one hop.
+  * Small graphs never enter the loop: the raw edge list is materialized
+  * once and read by one bounded job, and when it fits
+  * `driverFinishEdges` the driver's union-find returns FINAL labels as a
+  * local frame — no label table, no relabel join, no label fixpoint.
+  * The bidirected, distinct edge list the loop needs is built only when
+  * the read overflows, from the same materialization, so Catalyst plans
+  * the caller's pair finder once. The fixpoint runs only after at least
+  * one distributed round, because rounds let labels lag one hop.
   *
   * At 100 TB the edge list (near-dup pairs) is orders of magnitude
   * smaller than the corpus; past that bounded read the driver sees only
@@ -62,16 +67,17 @@ object Clusters {
     * remaining rounds collapse into ONE collect + min-label union-find.
     * Each distributed round costs ~6 scheduled jobs regardless of size —
     * on a contracted graph of a few thousand rows that is pure scheduling
-    * overhead. The driver holds ≤ 2·driverFinishEdges longs (sub-MB at
-    * the default). Pass 0 to keep every round distributed.
+    * overhead. Pass 0 to keep every round distributed.
     *
-    * The first edge list is read with ONE bounded job (`limit(
-    * driverFinishEdges + 1)`). When it fits, the union-find labels are
-    * final and come back as a local frame of `(id, cluster_id)` for every
-    * node: no label table, relabel join or fixpoint runs. Otherwise the
-    * list is counted and the distributed loop starts; its rounds let
-    * labels lag one hop behind the contraction, so those graphs finish
-    * with the label fixpoint below.
+    * The raw `(u, v)` list, self-loops dropped, is read with ONE bounded
+    * job ([[boundedRead]]) before any doubling or `distinct`. When it
+    * fits, the union-find labels are final and come back as a local
+    * frame of `(id, cluster_id)` for every node: no label table, relabel
+    * join or fixpoint runs. Otherwise the bidirected, distinct edge
+    * checkpoint is built from the same materialization, so the caller's
+    * pair finder runs once either way, and the distributed loop starts;
+    * its rounds let labels lag one hop behind the contraction, so those
+    * graphs finish with the label fixpoint below.
     */
   def connectedComponents(
       edges: DataFrame, srcCol: String, dstCol: String,
@@ -80,16 +86,26 @@ object Clusters {
     import spark.implicits._
     val finishCap = driverFinishEdges.max(0).min(Int.MaxValue - 1)
     val e0 = edges.select(col(srcCol).cast("long").as("u"),
-      col(dstCol).cast("long").as("v"))
+        col(dstCol).cast("long").as("v"))
+      .filter(col("u") =!= col("v"))
+    boundedRead(e0, finishCap) match {
+      case Left(rows) => minRoots(endpoints(rows)).toSeq.toDF("id", "cluster_id")
+      case Right(mat) =>
+        try distributedComponents(mat, finishCap) finally freeCheckpoint(mat)
+    }
+  }
+
+  /** The distributed contraction loop over a materialized `(u, v)` edge
+    * list (self-loops dropped) that overflowed `finishCap`. The caller
+    * frees `e0`; every frame this returns is already materialized.
+    */
+  private def distributedComponents(e0: DataFrame, finishCap: Int): DataFrame = {
+    val spark = e0.sparkSession
+    import spark.implicits._
     // undirected: keep both directions; distinct so parallel edges don't
     // multiply join rows
     var e = e0.union(e0.select(col("v").as("u"), col("u").as("v")))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint()
-    val head = e.limit(finishCap + 1).collect()
-    if (head.length <= finishCap) {
-      freeCheckpoint(e)
-      return minRoots(head).toSeq.toDF("id", "cluster_id")
-    }
+      .distinct().localCheckpoint()
 
     // labels: original node -> current representative (starts at itself;
     // the u side of the bidirected list covers every node)
@@ -134,7 +150,9 @@ object Clusters {
     if (remaining > 0) {
       // small-remnant finish: one union-find over the collected contracted
       // graph replaces the remaining O(log) distributed rounds
-      val relabel = minRoots(e.collect()).filter { case (k, r) => k != r }
+      val relabel = minRoots(e.collect().iterator
+          .map(r => (r.getLong(0), r.getLong(1))))
+        .filter { case (k, r) => k != r }
       if (relabel.nonEmpty) {
         val m = broadcast(relabel.toSeq.toDF("t", "tc"))
         val oldLabels = labels
@@ -174,10 +192,27 @@ object Clusters {
     * dedup).
     *
     * Plan: new-edge endpoints are remapped through their old labels
-    * (one narrow join), so the loop runs on the CONTRACTED graph whose
+    * (one narrow join), so the work runs on the CONTRACTED graph whose
     * nodes are touched old-cluster representatives plus brand-new ids —
-    * proportional to the BATCH, never the corpus. Old labels then
-    * compose through the supernode labeling with one more join.
+    * proportional to the BATCH, never the corpus.
+    *
+    * Invariant of `labels`: every cluster id labels itself (the cluster's
+    * minimum id is a member), and no cluster id is NULL — what
+    * [[connectedComponents]] and this method return. So a remapped
+    * endpoint whose old label is missing is a brand-new id, and a
+    * brand-new id never equals an old cluster id.
+    *
+    * Driver finish: the remapped edges, each flagged with whether its
+    * endpoints are brand-new, are read with ONE bounded job (the
+    * `driverFinishEdges` cap of [[connectedComponents]]). When they fit,
+    * the union-find gives every supernode's root. Old nodes are relabeled
+    * in the scan of `labels`, through a driver map of only the old
+    * representatives that moved (at most 2 × the cap entries) — no join,
+    * no broadcast exchange — and brand-new nodes are a local frame, so
+    * reading the result is one job. When they overflow, the distributed
+    * loop runs on the same materialization (the pair finder upstream
+    * runs once) and old labels compose through the supernode labeling
+    * with two joins.
     *
     * Exactness (asserted in ClustersSpec and by d11 sharing d08's full
     * recompute oracle): every old cluster id is the MIN of its cluster,
@@ -189,7 +224,22 @@ object Clusters {
       labels: DataFrame,
       newEdges: DataFrame,
       srcCol: String,
-      dstCol: String): DataFrame = {
+      dstCol: String): DataFrame =
+    incrementalComponents(labels, newEdges, srcCol, dstCol,
+      driverFinishEdges = 100000)
+
+  /** As [[incrementalComponents]], with the driver finish exposed as in
+    * [[connectedComponents]]: pass 0 to force the distributed path.
+    */
+  def incrementalComponents(
+      labels: DataFrame,
+      newEdges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      driverFinishEdges: Int): DataFrame = {
+    val spark = labels.sparkSession
+    import spark.implicits._
+    val finishCap = driverFinishEdges.max(0).min(Int.MaxValue - 1)
     val lab = labels.select(col("id").cast("long").as("id"),
       col("cluster_id").cast("long").as("comp"))
     val remapped = newEdges
@@ -197,21 +247,84 @@ object Clusters {
       .join(lab.select(col("id").as("u"), col("comp").as("cu")), Seq("u"), "left")
       .join(lab.select(col("id").as("v"), col("comp").as("cv")), Seq("v"), "left")
       .select(coalesce(col("cu"), col("u")).as("u"),
-        coalesce(col("cv"), col("v")).as("v"))
+        coalesce(col("cv"), col("v")).as("v"),
+        col("cu").isNull.as("u_new"), col("cv").isNull.as("v_new"))
       .filter(col("u") =!= col("v"))
-    val superCC = connectedComponents(remapped, "u", "v")
-      .select(col("id").as("snode"), col("cluster_id").as("scomp"))
-    // old nodes: follow the cluster representative's new label, if any
-    val updatedOld = lab
-      .join(superCC.withColumnRenamed("snode", "comp"), Seq("comp"), "left")
-      .select(col("id"), coalesce(col("scomp"), col("comp")).as("cluster_id"))
-    // brand-new nodes: supernodes that never had a label (old cluster
-    // representatives always label themselves, so they ARE in `labels`)
-    val newNodes = superCC
-      .join(lab, superCC("snode") === lab("id"), "left_anti")
-      .select(col("snode").as("id"), col("scomp").as("cluster_id"))
-    updatedOld.unionByName(newNodes)
+    boundedRead(remapped, finishCap) match {
+      case Left(rows) =>
+        val roots = minRoots(endpoints(rows))
+        val fresh = rows.iterator.flatMap { r =>
+          Iterator(0, 1).filter(i => r.getBoolean(i + 2)).map(i => r.getLong(i))
+        }.toSet
+        val moved = roots.toArray
+          .filter { case (n, r) => n != r && !fresh(n) }.sortBy(_._1)
+        val from = moved.map(_._1)
+        val to = moved.map(_._2)
+        val relabel = udf { (c: Long) =>
+          val i = java.util.Arrays.binarySearch(from, c)
+          if (i >= 0) to(i) else c
+        }
+        lab.select(col("id"), relabel(col("comp")).as("cluster_id"))
+          .unionByName(fresh.toSeq.map(x => (x, roots(x)))
+            .toDF("id", "cluster_id"))
+      case Right(mat) =>
+        val superCC =
+          try distributedComponents(mat.select("u", "v"), finishCap)
+            .select(col("id").as("snode"), col("cluster_id").as("scomp"))
+          finally freeCheckpoint(mat)
+        // old nodes: follow the cluster representative's new label, if any
+        val updatedOld = lab
+          .join(superCC.withColumnRenamed("snode", "comp"), Seq("comp"), "left")
+          .select(col("id"), coalesce(col("scomp"), col("comp")).as("cluster_id"))
+        // brand-new nodes: supernodes that never had a label (old cluster
+        // representatives always label themselves, so they ARE in `labels`)
+        val newNodes = superCC
+          .join(lab, superCC("snode") === lab("id"), "left_anti")
+          .select(col("snode").as("id"), col("scomp").as("cluster_id"))
+        updatedOld.unionByName(newNodes)
+    }
   }
+
+  /** Materialize `edges` (leading `(u, v)` long columns) ONCE, as a lazy
+    * local checkpoint, and read it with ONE job that ships at most
+    * `perTask` rows per partition, where the partitions together ship at
+    * most 8 × (cap + 1) rows; a partition over its share reports only
+    * its count. Returns the rows when there are at most `cap` of them
+    * (the checkpoint is freed), else the materialization, which the
+    * caller frees. A second job runs only when a skewed partition held
+    * back rows of a list that turns out to fit.
+    *
+    * One job, not `limit(cap + 1).collect()`: a take scans one partition,
+    * then the rest, and the lazy checkpoint adds a job for the partitions
+    * the take skipped.
+    */
+  private def boundedRead(edges: DataFrame, cap: Int)
+      : Either[Array[InternalRow], DataFrame] = {
+    val mat = edges.localCheckpoint(eager = false)
+    val rdd = mat.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
+    val parts = rdd.getNumPartitions
+    val perTask = (8L * (cap + 1L) / parts.max(1)).max(1L).min(cap + 1L).toInt
+    // (rows in the partition, its rows or null when over its share)
+    val read = rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
+      val head = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+      var n = 0L
+      it.foreach { r => if (n < perTask) head += r; n += 1 }
+      (n, if (n <= perTask) head.toArray else null)
+    })
+    if (read.map(_._1).sum > cap) Right(mat)
+    else {
+      val held = read.indices.filter(i => read(i)._2 == null)
+      // a job over no partitions still posts a job start: skip it
+      val rest = if (held.isEmpty) Array.empty[Array[InternalRow]]
+        else rdd.sparkContext.runJob(rdd,
+          (it: Iterator[InternalRow]) => it.toArray, held)
+      freeCheckpoint(mat)
+      Left(read.flatMap(r => Option(r._2)).flatten ++ rest.flatten)
+    }
+  }
+
+  private def endpoints(rows: Array[InternalRow]): Iterator[(Long, Long)] =
+    rows.iterator.map(r => (r.getLong(0), r.getLong(1)))
 
   /** Unpersist the cached blocks behind a `localCheckpoint`ed frame.
     * `Dataset.unpersist` only touches cache-manager entries; a local
@@ -221,16 +334,15 @@ object Clusters {
     */
   private[ops] def freeCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        Bridge.freeBlocks(lr.rdd)
+      case lr: LogicalRDD => Bridge.freeBlocks(lr.rdd)
       case _ => ()
     }
 
-  /** Min-label union-find over collected (u, v) edge rows: every node
-    * that appears in `edges` mapped to the minimum node of its component.
+  /** Min-label union-find over (u, v) edges: every node that appears in
+    * `edges` mapped to the minimum node of its component.
     */
   private def minRoots(
-      edges: Array[org.apache.spark.sql.Row]): scala.collection.Map[Long, Long] = {
+      edges: Iterator[(Long, Long)]): scala.collection.Map[Long, Long] = {
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -239,8 +351,7 @@ object Clusters {
       while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    edges.foreach { row =>
-      val u = row.getLong(0); val v = row.getLong(1)
+    edges.foreach { case (u, v) =>
       parent.getOrElseUpdate(u, u); parent.getOrElseUpdate(v, v)
       val ru = find(u); val rv = find(v)
       if (ru != rv) { // min root wins -> root stays the component minimum
@@ -725,11 +836,14 @@ object Clusters {
     (1 to iters).foreach { _ =>
       // tele is constant within a (doc, dst) group (doc-level constant);
       // max() is a deterministic way to carry it through the rollup
-      ranks = edges
-        .join(ranks, edges(idCol) === ranks(idCol) &&
-          edges("srcH") === ranks("wh"))
-        .select(edges(idCol).as(idCol), col("dstH").as("wh"),
-          expr("rank div deg").as("c"), col("tele"))
+      // both sides aliased: from round 2 on `ranks` derives from `edges`,
+      // so `edges(idCol) === ranks(idCol)` would compare one attribute
+      // with itself
+      ranks = edges.as("e")
+        .join(ranks.as("r"), col(s"e.$idCol") === col(s"r.$idCol") &&
+          col("e.srcH") === col("r.wh"))
+        .select(col(s"e.$idCol").as(idCol), col("e.dstH").as("wh"),
+          expr("r.rank div e.deg").as("c"), col("e.tele").as("tele"))
         .groupBy(col(idCol), col("wh"))
         .agg(sum("c").as("sum_c"), max("tele").as("tele"))
         .select(col(idCol), col("wh"),

@@ -2439,7 +2439,7 @@ object Corpus {
       .createDataFrame(weights.keys.toSeq.sorted.map(Tuple1(_)))
       .toDF("source")
     val wcol = element_at(typedlit(weights), col("source"))
-    broadcast(spine).join(perSource, Seq("source"), "full")
+    spine.join(perSource, Seq("source"), "full")
       .crossJoin(broadcast(total.select("n_windows")))
       .select(col("source"),
         coalesce(col("n_docs"), lit(0L)).as("n_docs"),

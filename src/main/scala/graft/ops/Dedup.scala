@@ -500,22 +500,27 @@ object Dedup {
     definiteNew.unionByName(verifiedNew)
   }
 
-  /** `df.stat.bloomFilter(c, expectedItems, fpp)` made total: the same
-    * single `bloom_filter_agg` aggregation, but an EMPTY input yields an
-    * empty filter (every probe answers "no") where Spark's reads the
-    * aggregate's NULL result and throws an NPE — an empty standing corpus
-    * is the first state of every maintained corpus.
+  /** The Bloom filter of the long column `c`:
+    * `BloomFilter.create(expectedItems, optimalNumOfBits(expectedItems,
+    * fpp))` holding every non-NULL value — byte for byte what
+    * `bloom_filter_agg` builds below that aggregate's item and bit caps.
+    * ONE job: each partition fills a copy of the empty filter and the
+    * copies merge by `treeAggregate` (the aggregate runs two: a partial
+    * aggregate, an exchange, then the final one). An EMPTY input yields
+    * the empty filter, whose every probe answers "no" — an empty
+    * standing corpus is the first state of every maintained corpus.
     */
   private[graft] def bloomFilter(
       df: DataFrame, c: String, expectedItems: Long, fpp: Double)
       : org.apache.spark.util.sketch.BloomFilter = {
     import org.apache.spark.util.sketch.BloomFilter
+    require(df.schema(c).dataType == org.apache.spark.sql.types.LongType,
+      s"bloomFilter needs a long column: $c")
     val numBits = BloomFilter.optimalNumOfBits(expectedItems, fpp)
-    val bytes = df.select(org.apache.spark.sql.graftbridge.Bridge.internalFn(
-        "bloom_filter_agg", col(c), lit(expectedItems), lit(numBits)))
-      .head().getAs[Array[Byte]](0)
-    if (bytes == null) BloomFilter.create(expectedItems, numBits)
-    else BloomFilter.readFrom(bytes)
+    df.select(col(c)).queryExecution.toRdd
+      .treeAggregate(BloomFilter.create(expectedItems, numBits))(
+        (bf, row) => { if (!row.isNullAt(0)) bf.putLong(row.getLong(0)); bf },
+        (a, b) => a.mergeInPlace(b))
   }
 
   /** Paragraph NORMALIZATION shared by the paragraph-dedup family:

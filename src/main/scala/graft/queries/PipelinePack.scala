@@ -69,9 +69,12 @@ object PipelinePack {
       val pairs = Dedup.nGramJaccard(Tables.load(s, dir, "documents"),
         "text", "doc_id", tauNum = 1, tauDen = 4)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val sw = broadcast(
-        Seq(0.25, 0.4, 0.5, 0.6, 0.75, 0.9).toDF("tau"))
-      val hit = pairs.crossJoin(sw).filter(col("jaccard") >= col("tau"))
+      // the hint sits on the cross join, where the sweep is the build
+      // side; the left outer joins below keep every tau on the left,
+      // which Spark cannot build
+      val sw = Seq(0.25, 0.4, 0.5, 0.6, 0.75, 0.9).toDF("tau")
+      val hit = pairs.crossJoin(broadcast(sw))
+        .filter(col("jaccard") >= col("tau"))
       val nTotal = broadcast(Tables.load(s, dir, "documents")
         .agg(count(lit(1)).as("n_docs")))
       val perTau = hit.groupBy("tau").agg(count(lit(1)).as("n_pairs"))

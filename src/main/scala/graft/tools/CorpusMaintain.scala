@@ -21,9 +21,13 @@ import graft.ops.{Clusters, Dedup}
   *     never the corpus pair space.
   *  3. RELABEL — fold the new edges into the standing min-id CC labels
   *     (d11's contracted supernode graph: cost ∝ touched clusters + new
-  *     ids, finished by the driver's union-find when it is batch-sized).
-  *     Min-id labels compose, so the result equals a full recompute
-  *     (spec-asserted).
+  *     ids). The remapped edges are read once, by one bounded job that
+  *     also runs the pair finder; when they are batch-sized the driver's
+  *     union-find finishes them, and the labels are the scan of the
+  *     standing labels, relabeled through a driver map of the moved
+  *     representatives, plus a local frame of the new ids — reading
+  *     them is one job. Min-id labels compose, so the result equals a
+  *     full recompute (spec-asserted).
   *  4. AUDIT — snapshot diff of corpus versions (d13): every admitted id
   *     reports `added`, everything else `unchanged` — the release-audit
   *     artifact of the fold.
@@ -50,8 +54,10 @@ object CorpusMaintain {
     *
     * Lifetime: `admitted` is an eager local checkpoint that `corpus`
     * and `diff` read, so the frames are valid until that checkpoint is
-    * unpersisted. Collect or write what the next fold needs before
-    * releasing persisted RDDs.
+    * unpersisted. `labels` reads the standing `labels` frame (plus a
+    * local frame), or, when the relabel graph overflowed the driver
+    * finish, label checkpoints of its own. Collect or write what the next
+    * fold needs before releasing persisted RDDs.
     */
   final case class Fold(
       admitted: DataFrame,
@@ -70,10 +76,11 @@ object CorpusMaintain {
       tauDen: Int = 2,
       fpp: Double = 0.01): Fold = {
     // 1. admit: collapse the batch to min-id representatives per content
-    // class, then Bloom + exact-verify against the corpus. Materialized
-    // ONCE: the pair finder, the diff and the caller all read it, and a
-    // lazy frame re-runs the batch dedup, the Bloom probe and the
-    // verify anti-join (and spreadIfNarrow's partition probe) per reader.
+    // class, then Bloom (one job) + exact-verify against the corpus.
+    // Materialized ONCE: the pair finder, the diff and the caller all read
+    // it, and a lazy frame re-runs the batch dedup, the Bloom probe and
+    // the verify anti-join (and spreadIfNarrow's partition probe) per
+    // reader.
     val batchUnique = batch.join(
       Dedup.exact(batch, textCol, idCol)
         .select(col("keep_id").as(idCol)), Seq(idCol))
@@ -91,7 +98,8 @@ object CorpusMaintain {
         admitted, newCorpus, textCol, idCol, tauNum, tauDen)
       .select(col("id_a"), col("id_b"))
 
-    // 3. relabel: contracted incremental CC over the new edges
+    // 3. relabel: contracted incremental CC over the new edges; its one
+    // bounded read runs the pair finder above, exactly once
     val newLabels = Clusters.incrementalComponents(
       labels, newEdges, "id_a", "id_b")
 

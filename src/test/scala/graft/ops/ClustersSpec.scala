@@ -62,7 +62,9 @@ class ClustersSpec extends SparkSpec {
       sites.filter(_.startsWith(s"$action at Clusters.scala"))
     assert(at(small, "head").isEmpty && at(small, "count").isEmpty,
       s"small graph: $small")
-    assert(at(small, "collect").size == 1, s"small graph: $small")
+    // the bounded read is the only job; the labels are a local frame
+    assert(small.size == 1 && at(small, "runJob").size == 1,
+      s"small graph: $small")
     // the distributed loop still counts and runs the fixpoint
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
@@ -103,6 +105,77 @@ class ClustersSpec extends SparkSpec {
         Seq.empty[(Long, Long)].toDF("a", "b"), "a", "b")
       .as[(Long, Long)].collect().toMap
     assert(same == labels0.as[(Long, Long)].collect().toMap)
+  }
+
+  // incrementalComponents on the driver finish and on the forced
+  // distributed path (driverFinishEdges = 0): both must equal a full
+  // recompute over old ∪ new edges, which the driver path's old-label
+  // relabel map and new-node frame must reproduce exactly
+  private def inc(old: Seq[(Long, Long)], batch: Seq[(Long, Long)])
+      : Map[Long, Long] = {
+    val labels0 = Clusters.connectedComponents(old.toDF("a", "b"), "a", "b")
+    val edges = batch.toDF("a", "b")
+    val driver = Clusters.incrementalComponents(labels0, edges, "a", "b")
+      .as[(Long, Long)].collect().toMap
+    val dist = Clusters.incrementalComponents(labels0, edges, "a", "b",
+      driverFinishEdges = 0).as[(Long, Long)].collect().toMap
+    assert(driver == dist, s"driver=$driver dist=$dist")
+    val full = cc(old ++ batch: _*)
+    assert(driver == full, s"driver=$driver full=$full")
+    driver
+  }
+
+  test("incrementalComponents: a new id smaller than the representative " +
+    "it merges into becomes the cluster id on both paths") {
+    val got = inc(Seq((10L, 11L), (11L, 12L), (20L, 21L)), Seq((5L, 12L)))
+    assert(got == Map(5L -> 5L, 10L -> 5L, 11L -> 5L, 12L -> 5L,
+      20L -> 20L, 21L -> 20L))
+  }
+
+  test("incrementalComponents: one new document merges two old clusters") {
+    val got = inc(Seq((1L, 2L), (10L, 11L)), Seq((40L, 2L), (11L, 40L)))
+    assert(got.keySet == Set(1L, 2L, 10L, 11L, 40L) &&
+      got.values.forall(_ == 1L))
+  }
+
+  test("incrementalComponents: an edge that becomes a self-loop after the " +
+    "remap changes nothing; an empty edge list changes nothing") {
+    val old = Seq((1L, 2L), (2L, 3L), (7L, 8L))
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L)
+    assert(inc(old, Seq((3L, 1L), (2L, 1L), (8L, 7L))) == want)
+    assert(inc(old, Seq.empty) == want)
+  }
+
+  test("incrementalComponents reads its remapped edges with one bounded " +
+    "job; the forced-distributed path reuses that materialization") {
+    val labels0 = Clusters.connectedComponents(
+      Seq((1L, 2L), (10L, 11L)).toDF("a", "b"), "a", "b")
+    // the pair finder stand-in counts the rows it emits
+    val emitted = spark.sparkContext.longAccumulator("emitted")
+    val counted = org.apache.spark.sql.functions.udf { (a: Long) =>
+      emitted.add(1); a
+    }.asNondeterministic()
+    val edges = Seq((40L, 2L), (11L, 40L), (50L, 51L)).toDF("a", "b")
+      .select(counted(col("a")).as("a"), col("b"))
+    for (finish <- Seq(100000, 0)) {
+      emitted.reset()
+      var res = labels0
+      var out = Map.empty[Long, Long]
+      val build = jobActions {
+        res = Clusters.incrementalComponents(labels0, edges, "a", "b",
+          driverFinishEdges = finish)
+      }
+      val read = jobActions { out = res.as[(Long, Long)].collect().toMap }
+      assert(out == Map(1L -> 1L, 2L -> 1L, 10L -> 1L, 11L -> 1L,
+        40L -> 1L, 50L -> 50L, 51L -> 50L), s"finish=$finish")
+      assert(emitted.value == 3L, s"finish=$finish: edges emitted " +
+        s"${emitted.value} times over, jobs $build $read")
+      if (finish > 0) { // one bounded read, then at most one label scan
+        assert(build.count(_.startsWith("runJob at Clusters.scala")) == 1,
+          s"build: $build")
+        assert(read.size <= 1, s"read: $read")
+      }
+    }
   }
 
   test("dedupClusters marks exactly one canonical doc per cluster") {

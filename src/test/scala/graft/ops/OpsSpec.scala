@@ -422,6 +422,37 @@ class DedupSpec extends SparkSpec {
     assert(intoEmpty == batch.select("doc_id").as[Long].collect().toSet)
   }
 
+  test("bloomFilter writes the bytes bloom_filter_agg writes, in one job; " +
+    "an empty frame answers no") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    import org.apache.spark.sql.graftbridge.Bridge
+    import org.apache.spark.util.sketch.BloomFilter
+    // NULLs are skipped by both; 3 partitions give 3 sketches to merge
+    // (checkpointed, so the count below sees only the build's jobs)
+    val hs = ((1L to 500L).map(i => Option(i * 7919L)) :+ None)
+      .toDF("h").repartition(3).localCheckpoint()
+    val (items, fpp) = (200L, 0.03)
+    val bits = BloomFilter.optimalNumOfBits(items, fpp)
+    def bytes(bf: BloomFilter): Seq[Byte] = {
+      val out = new java.io.ByteArrayOutputStream()
+      bf.writeTo(out)
+      out.toByteArray.toSeq
+    }
+    val agg = Bridge.column(new BloomFilterAggregate(
+        Bridge.unresolvedExpression(col("h")), Literal(items), Literal(bits))
+      .toAggregateExpression())
+    val want = hs.select(agg).head().getAs[Array[Byte]](0).toSeq
+    var got: BloomFilter = null
+    val jobs = jobActions { got = Dedup.bloomFilter(hs, "h", items, fpp) }
+    assert(bytes(got) == want)
+    assert(jobs.size == 1, s"jobs: $jobs")
+    assert((1L to 500L).forall(i => got.mightContainLong(i * 7919L)))
+    val empty = Dedup.bloomFilter(hs.limit(0), "h", items, fpp)
+    assert((1L to 500L).forall(i => !empty.mightContainLong(i * 7919L)))
+    assert(bytes(empty) == bytes(BloomFilter.create(items, bits)))
+  }
+
   test("nGramJaccard finds exact and near duplicates, not distinct docs") {
     val pairs = Dedup.nGramJaccard(docs, "text", "doc_id", 1, 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq

@@ -80,6 +80,42 @@ class CorpusMaintainSpec extends SparkSpec {
     assert(f.diff.filter("status != 'added'").isEmpty)
   }
 
+  test("job budget: the labels collect and the Bloom build run one job " +
+    "each; a forced-overflow relabel runs the pair finder once") {
+    // standing labels read from parquet, as a maintained corpus keeps them
+    val dir = java.nio.file.Files.createTempDirectory("fold_labels").toFile
+    try budget(dir) finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
+  private def budget(dir: java.io.File): Unit = {
+    import org.apache.spark.sql.functions.{col, udf}
+    labels0.write.mode("overwrite").parquet(dir.toString)
+    val standing = spark.read.parquet(dir.toString)
+    var f: CorpusMaintain.Fold = null
+    val foldJobs = jobActions {
+      f = CorpusMaintain.foldBatch(corpus0, standing, batch,
+        "text", "doc_id", expectedItems = 100L)
+    }
+    assert(foldJobs.count(_.startsWith("treeAggregate at Dedup.scala")) == 1,
+      s"fold: $foldJobs")
+    val labelJobs = jobActions { f.labels.collect() }
+    assert(labelJobs.size == 1, s"labels: $labelJobs")
+    // the fold's link and relabel steps with the driver finish off: the
+    // counter sits on the pair finder's output, so a second run of the
+    // finder would count its edges twice
+    def link = Dedup.crossJaccard(f.admitted, f.corpus, "text", "doc_id", 1, 2)
+      .select(col("id_a"), col("id_b"))
+    val nEdges = link.count()
+    val emitted = spark.sparkContext.longAccumulator("pair_finder_rows")
+    val counted = udf { (a: Long) => emitted.add(1); a }.asNondeterministic()
+    val forced = Clusters.incrementalComponents(standing,
+      link.select(counted(col("id_a")).as("id_a"), col("id_b")),
+      "id_a", "id_b", driverFinishEdges = 0)
+    assert(labelsOf(forced) == labelsOf(f.labels))
+    assert(nEdges > 0 && emitted.value == nEdges,
+      s"pair finder emitted ${emitted.value} rows for $nEdges edges")
+  }
+
   test("diff reports admitted ids as added, standing ids as unchanged") {
     val d = fold().diff.collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
